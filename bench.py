@@ -133,6 +133,28 @@ _POST61 = {"q_bm25_topk", "ann_lsh_multi", "q_ngram_perplexity_served",
 # in the registry is visible in BENCH_r{N}.json.
 
 
+# Per-query deltas and 8c-vs-32c scaling are read from bench's stdout
+# line, but the full 273-query map is ~7 KB against a 2000-char tail
+# capture — physically unshippable. So ship the queries that carry the
+# time: fill "per_query" greedily in descending-seconds order (ties broken
+# by name, so the 8-core and 32-core runs of one round select
+# near-identical sets) until the line hits the budget. Every figure still
+# lands in BENCH_DETAIL.json.
+def fill_per_query(obj: dict, timings: dict[str, float], budget: int = 1900) -> None:
+    """Add a ``per_query`` map to ``obj`` within ``budget`` chars of JSON;
+    add no key at all when not even one entry fits."""
+    per_query: dict[str, float] = {}
+    used = len(json.dumps({**obj, "per_query": per_query}))
+    for n in sorted(timings, key=lambda n: (-timings[n], n)):
+        entry = len(json.dumps({n: round(timings[n], 2)})) + 1
+        if used + entry > budget:
+            break
+        per_query[n] = round(timings[n], 2)
+        used += entry
+    if per_query:
+        obj["per_query"] = per_query
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -380,25 +402,6 @@ def main() -> None:
         "regressions": regressions,
         "sink": "noop",
     }
-    # Round 15 (VERDICT r14 item #1): the driver scores per-query deltas
-    # and 8c-vs-32c scaling from THIS line, but the full 273-query map is
-    # ~7 KB against a 2000-char tail capture — physically unshippable. So
-    # ship the queries that carry the time: fill "per_query" greedily in
-    # descending-seconds order (ties broken by name, so the 8-core and
-    # 32-core runs of one round select near-identical sets) until the
-    # line hits the budget. Every figure still lands in BENCH_DETAIL.json.
-    def fill_per_query(obj: dict, budget: int = 1900) -> None:
-        obj["per_query"] = {}
-        base = len(json.dumps(obj))
-        ranked = sorted(timings, key=lambda n: (-timings[n], n))
-        used = base
-        for n in ranked:
-            entry = len(json.dumps({n: round(timings[n], 2)})) + 1
-            if used + entry > budget:
-                break
-            obj["per_query"][n] = round(timings[n], 2)
-            used += entry
-
     line = json.dumps(line_obj)
     if len(line) > 1900 and regressions:
         # keep the count; the per-query pairs live in BENCH_DETAIL.json
@@ -430,7 +433,7 @@ def main() -> None:
     # after the ladder settles, spend whatever budget remains on the
     # per-query map (most-expensive first) — additive, never displaces
     # an existing field
-    fill_per_query(line_obj)
+    fill_per_query(line_obj, timings)
     line = json.dumps(line_obj)
     print(line)
 

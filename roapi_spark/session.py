@@ -16,6 +16,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# the checkout root: Python workers import roapi_spark (the worker daemon
+# below and pickled UDF references) from here wherever the driver started
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
 
 def get_spark(
     app_name: str = "roapi_spark",
@@ -49,8 +54,16 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # skips the per-task re-read of Spark's own zips and jar
+        # (see roapi_spark/pyworker.py)
+        .config("spark.python.daemon.module", "roapi_spark.pyworker")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    paths = conf.get(WORKER_PYTHONPATH, "").split(os.pathsep)
+    conf[WORKER_PYTHONPATH] = os.pathsep.join(
+        [ROOT] + [p for p in paths if p and p != ROOT]
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -164,17 +164,21 @@ def _exact_bucket_col(col) -> "F.Column":
     return F.pmod(F.xxhash64(col), F.lit(N_EXACT_BUCKETS)).cast("int")
 
 
-# Stateful streaming stages pay a measured ~60 ms PER STATE PARTITION per
-# micro-batch (state store open/commit plus the per-task Python
-# state-server setup): a 1-row, 1-group batch costs ~2 s at 32 shuffle
-# partitions, ~1 s at 8, ~0.55 s at 2. The state partition count is pinned
-# from spark.sql.shuffle.partitions when a stateful stream first starts,
-# so it should track ARRIVAL VOLUME and state size, not cluster width —
-# exactly like N_EXACT_BUCKETS above. 8 is sized for fixture arrival
-# rates; production deployments with high-volume frontiers raise it via
-# the env knob (it only bounds the stateful stage's parallelism — scans
-# and foreachBatch aggregations are planned per batch with AQE and keep
-# the session-wide setting).
+# Stateful streaming stages pay a fixed cost PER STATE PARTITION per
+# micro-batch. Measured on stream_url_frontier at sf0.01 (4 cores, from
+# q.recentProgress, 8 vs 4 partitions, warm): each added partition costs
+# ~130 ms of state-store commit (stateOperators[].commitTimeMs) plus
+# ~145 ms of fixed update work (allUpdatesTimeMs: the Python runner and
+# its state-server setup), summed over tasks; ~90 ms of addBatch wall
+# time. The state partition count is pinned from
+# spark.sql.shuffle.partitions when a stateful stream first starts, so it
+# should track ARRIVAL VOLUME and state size, not cluster width — exactly
+# like N_EXACT_BUCKETS above. 8 is sized for fixture arrival rates;
+# production deployments with high-volume frontiers raise it via the env
+# knob. It is not confined to the stateful stage: the gate serves call
+# processAllAvailable() inside ``with stream_state_partitions(...)``, so
+# the shuffles of their foreachBatch aggregations are planned at this
+# count too (AQE can only coalesce below it).
 STREAM_STATE_PARTITIONS = int(
     os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
 )
