@@ -90,7 +90,7 @@ def _transitive_module_files(mod_name: str) -> set[str]:
     within the roapi_spark package (static AST import scan, memoized).
     This is what makes rotation change-aware for queries whose builder
     is a thin wrapper over reworked machinery (e.g. the delta DML
-    queries in functions/pipeline13.py over sinks/delta.py)."""
+    queries in functions/gates.py over sinks/delta.py)."""
     import ast
     import os
 

@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from roapi_spark.plans.registry import load_all
 from roapi_spark.session import get_spark
+from roapi_spark.util import drop_persistent_blocks
 
 # Headline set: TPC-H-shaped analytics + the LLM-pipeline operators.
 BENCH_QUERIES = [
@@ -168,15 +169,6 @@ def main() -> None:
     spark.range(1000).count()
     specs["q6_revenue_delta"].builder(spark, sf_dir).count()
 
-    def drop_persistent_blocks() -> None:
-        # iterative queries localCheckpoint intermediates; unpersist them so
-        # one query's blocks don't pressure the next query's memory
-        jsc = spark.sparkContext._jsc.sc()
-        for rdd in spark.sparkContext._jvm.scala.collection.JavaConverters.mapAsJavaMap(
-            jsc.getPersistentRDDs()
-        ).values():
-            rdd.unpersist(False)
-
     def best_of_two(name: str, sink) -> float:
         # min of two passes: this host shares cores with the test driver's
         # own JVMs and single runs swing 2-4x under transient contention;
@@ -184,7 +176,7 @@ def main() -> None:
         # steady-state benchmarking)
         best = None
         for _ in range(2):
-            drop_persistent_blocks()
+            drop_persistent_blocks(spark)
             t0 = time.time()
             sink(specs[name].builder(spark, sf_dir))
             el = time.time() - t0
@@ -234,7 +226,7 @@ def main() -> None:
     for _ in range(3):
         t_pass = 0.0
         for n in subset_names:
-            drop_persistent_blocks()
+            drop_persistent_blocks(spark)
             t0 = time.time()
             specs[n].builder(spark, sf_dir).count()
             t_pass += time.time() - t0

@@ -79,7 +79,7 @@ def run(spark, sf_dir: str, out_root: str) -> dict:
     }
 
     # stage 4: index the archives, write CDXJ
-    from roapi_spark.functions.pipeline14 import _warc_fixture_dir
+    from roapi_spark.functions.crawl import _warc_fixture_dir
     from roapi_spark.sinks.cdx import index_warc, write_cdx
 
     ptrs = index_warc(spark, _warc_fixture_dir(spark, sf_dir))

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from roapi_spark.functions.text import docs, tokens_col
 from roapi_spark.plans.registry import register
 from roapi_spark.util import WS_CLASS, hash32, hash32_sql, pround
 
@@ -55,14 +56,6 @@ _SHINGLES_DUCK = f"""
     FROM toks, UNNEST(GENERATE_SERIES(1, GREATEST(LEN(w) - 2, 0))) AS t(i)
   )
 """
-
-
-def docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-
-def tokens_col() -> Column:
-    return F.filter(F.split(F.lower(F.col("text")), "[^a-z]+"), lambda x: F.length(x) > 0)
 
 
 def shingle_array_of(w: Column, n: int = 3) -> Column:

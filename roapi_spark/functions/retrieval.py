@@ -1,16 +1,6 @@
-"""Training-pipeline batch 7 (round 6): retrieval scoring.
-
-BM25 joins the tf-idf keyterm operator (pipeline3) as the other standard
-lexical relevance scorer — the one retrieval deployments (and RAG data
-curation: picking corpus passages relevant to a benchmark/query set)
-actually rank with, since it adds document-length normalization and the
-saturating tf term that plain tf-idf lacks.
-
-Scale shape (the part that matters at 100 TB): query terms and the df
-table are vocabulary-bounded dimensions; the only big join is posting
-lists (term-keyed — the same key the tf aggregation already shuffled on)
-against a broadcast query-term set, then one doc-keyed agg and a
-bounded top-k window per query. No all-pairs, no global sort.
+"""Retrieval operators: the term-keyed inverted index, BM25 scoring (batch
+and served from a build-once index), and the recall audits of the
+approximate nearest-neighbour searches in similarity.py / pq.py.
 """
 
 from __future__ import annotations
@@ -20,11 +10,255 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from roapi_spark.functions.text import _TOKENS_SQL_DUCK, docs, tokens_col
 from roapi_spark.plans.registry import register
 from roapi_spark.plans.util import maybe_broadcast
-from roapi_spark.util import pround
+from roapi_spark.util import pround, serve_persist
 
-_TOKS_DUCK = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> length(x) > 0)"
+
+# ==== inverted index ========================================================
+
+
+MIN_DF = 10
+POSTINGS_CAP = 50
+
+
+@register(
+    "q_inverted_index",
+    oracle=f"""
+    WITH tok AS (
+      SELECT doc_id,
+             unnest(list_distinct(list_filter(
+               string_split_regex(lower(text), '[^a-z]+'),
+               x -> length(x) > 0))) AS token
+      FROM documents
+    )
+    SELECT token, CAST(COUNT(*) AS BIGINT) AS df,
+           array_to_string(
+             list_slice(LIST(doc_id ORDER BY doc_id), 1, {POSTINGS_CAP}),
+             ',') AS postings
+    FROM tok GROUP BY token HAVING COUNT(*) >= {MIN_DF}
+    """,
+    doc="Inverted-index (posting list) construction: distinct (token, "
+    f"doc_id) pairs, grouped by token with df >= {MIN_DF} and postings "
+    f"capped at {POSTINGS_CAP} ids. The shuffle key is the token; at "
+    "100 TB the full lists would be range-bucketed by token instead of "
+    "capped — the cap here bounds result-row width, not the build. "
+    "Postings are emitted as a ','-joined string (like q_array_agg) so "
+    "every comparison harness can sort/hash the frame.",
+    tags=("text",),
+)
+def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = docs(spark, sf_dir)
+    tok = d.select(
+        "doc_id",
+        F.explode(
+            F.array_distinct(
+                F.filter(
+                    F.split(F.lower(F.col("text")), "[^a-z]+"),
+                    lambda x: F.length(x) > 0,
+                )
+            )
+        ).alias("token"),
+    )
+    return (
+        tok.groupBy("token")
+        .agg(
+            F.count("*").cast("bigint").alias("df"),
+            F.array_join(
+                F.transform(
+                    F.slice(F.array_sort(F.collect_list("doc_id")), 1, POSTINGS_CAP),
+                    lambda x: x.cast("string"),
+                ),
+                ",",
+            ).alias("postings"),
+        )
+        .filter(F.col("df") >= MIN_DF)
+    )
+
+
+# ==== ANN recall audits =====================================================
+# Recall@5 of each approximate search in similarity.py / pq.py against
+# the exact brute-force neighbours.
+
+
+# -- ANN recall audit --------------------------------------------------------
+
+
+def _recall_oracle(query_name: str) -> str:
+    """Compose any registered approximate-search query's oracle with the
+    exact brute-force oracle as nested CTEs (DuckDB allows a WITH inside
+    a CTE body) into ONE recall@TOP_K audit — the single source of the
+    overlap/rounding recipe for every per-family recall query. Imports
+    the registering modules directly (their @register calls populate
+    QUERIES) instead of load_all(), which would re-enter the registry's
+    import chain mid-import."""
+    import roapi_spark.functions.pq  # noqa: F401
+    import roapi_spark.functions.similarity  # noqa: F401
+    from roapi_spark.functions.similarity import TOP_K
+    from roapi_spark.plans.registry import QUERIES
+
+    approx = QUERIES[query_name].oracle
+    exact = QUERIES["knn_bruteforce"].oracle
+    return f"""
+    WITH approx AS ({approx}), exact AS ({exact}),
+    ov AS (
+      SELECT i.qid, COUNT(*) AS hits
+      FROM approx i JOIN exact e ON e.qid = i.qid AND e.neighbor_id = i.neighbor_id
+      GROUP BY i.qid
+    ),
+    q AS (SELECT DISTINCT qid FROM exact)
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
+           FLOOR(AVG(COALESCE(ov.hits, 0) / {float(TOP_K)}) * 10000 + 0.5) / 10000.0
+             AS recall_at_5
+    FROM q LEFT JOIN ov USING (qid)
+    """
+
+
+def _ann_recall_pair(spark, sf_dir, ann_df):
+    from roapi_spark.functions.similarity import TOP_K, knn_bruteforce
+
+    # the exact top-5 feeds BOTH the overlap join and the query-set
+    # distinct: persist the (N_QUERIES x TOP_K)-row result so the
+    # brute-force self-join runs once per recall audit, not twice
+    # (guide §5; fixes all six q_*_recall gates)
+    exact = serve_persist(
+        knn_bruteforce(spark, sf_dir).select("qid", "neighbor_id")
+    )
+    ov = (
+        ann_df.select("qid", "neighbor_id")
+        .join(exact, ["qid", "neighbor_id"])
+        .groupBy("qid")
+        .agg(F.count("*").alias("hits"))
+    )
+    q = exact.select("qid").distinct()
+    return q.join(ov, "qid", "left").agg(
+        F.count("*").cast("bigint").alias("n_queries"),
+        pround(
+            F.avg(F.coalesce("hits", F.lit(0)) / F.lit(float(TOP_K)))
+        ).alias("recall_at_5"),
+    )
+
+
+@register(
+    "q_ann_recall",
+    oracle=_recall_oracle("ann_ivf_kmeans"),
+    doc="ANN recall audit: recall@5 of the IVF-k-means search against "
+    "the exact brute-force top-5 — THE number an ANN deployment tunes "
+    "nprobe/list-count by. Composes the two registered operators (IVF "
+    "serves from its partition-pruned layout; brute force scans once); "
+    "the overlap join and average touch N_QUERIES rows.",
+    tags=("similarity", "audit"),
+)
+def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from roapi_spark.functions.similarity import ann_ivf_kmeans
+
+    return _ann_recall_pair(spark, sf_dir, ann_ivf_kmeans(spark, sf_dir))
+
+
+
+
+@register(
+    "q_ann_recall_nprobe",
+    oracle=_recall_oracle("ann_ivf_nprobe"),
+    doc="Recall@5 of the multi-probe IVF variant — paired with "
+    "q_ann_recall (single probe) this is the nprobe dial measured: more "
+    "probed lists, higher recall, more rows scanned (the ivf_probed_rows "
+    "figure in docs/SCALE.md).",
+    tags=("similarity", "audit"),
+)
+def q_ann_recall_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from roapi_spark.functions.similarity import ann_ivf_nprobe
+
+    return _ann_recall_pair(spark, sf_dir, ann_ivf_nprobe(spark, sf_dir))
+
+
+
+
+@register(
+    "q_lsh_recall",
+    oracle=_recall_oracle("ann_lsh"),
+    doc="Recall@5 of the hyperplane-LSH search against the exact "
+    "brute-force top-5 — the quality axis for the hashing index family, "
+    "completing the per-family audit trio (IVF: q_ann_recall/_nprobe; "
+    "LSH: here; PQ: q_pq_recall). A single 8-bit signature family trades "
+    "recall for a 1/2^8 expected bucket scan; this query is the measured "
+    "price. Same N_QUERIES-bounded overlap join as the IVF audits.",
+    tags=("similarity", "audit"),
+)
+def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from roapi_spark.functions.similarity import ann_lsh
+
+    return _ann_recall_pair(spark, sf_dir, ann_lsh(spark, sf_dir))
+
+
+
+
+@register(
+    "q_pq_recall",
+    oracle=_recall_oracle("ann_pq_adc"),
+    doc="Recall@5 of the product-quantized ADC search against the exact "
+    "brute-force top-5 — the measured quantization loss of the ~256x "
+    "code compression (the number that justifies, or indicts, M and K "
+    "for a corpus). Same N_QUERIES-bounded overlap join as the other "
+    "recall audits.",
+    tags=("similarity", "audit"),
+)
+def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from roapi_spark.functions.pq import ann_pq_adc
+
+    return _ann_recall_pair(spark, sf_dir, ann_pq_adc(spark, sf_dir))
+
+
+
+
+@register(
+    "q_pq_rerank_recall",
+    oracle=_recall_oracle("ann_ivfpq_rerank"),
+    doc="Recall@5 of IVF-PQ WITH exact re-ranking — the after picture to "
+    "q_pq_recall's raw ADC number: the refine stage re-scores a "
+    "constant-size shortlist with exact distances, recovering the "
+    "accuracy the code compression threw away at O(C) extra work per "
+    "query. Paired with q_pq_recall this is the measured value of the "
+    "refine knob. Same N_QUERIES-bounded overlap join.",
+    tags=("similarity", "audit"),
+)
+def q_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from roapi_spark.functions.pq import ann_ivfpq_rerank
+
+    return _ann_recall_pair(spark, sf_dir, ann_ivfpq_rerank(spark, sf_dir))
+
+
+
+
+@register(
+    "q_lsh_multi_recall",
+    oracle=_recall_oracle("ann_lsh_multi"),
+    doc="Recall@5 of the multi-table LSH search — the after picture to "
+    "q_lsh_recall's single-table 0.00: L independent tables give each "
+    "true neighbor L collision chances (1-(1-p^k)^L), the measured value "
+    "of the L-tables knob. Same N_QUERIES-bounded overlap join.",
+    tags=("similarity", "audit"),
+)
+def q_lsh_multi_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from roapi_spark.functions.similarity import ann_lsh_multi
+
+    return _ann_recall_pair(spark, sf_dir, ann_lsh_multi(spark, sf_dir))
+
+
+# ==== BM25 ==================================================================
+# BM25 joins the tf-idf keyterm operator (text.text_tfidf_topk) as the
+# other standard lexical relevance scorer — the one retrieval deployments
+# (and RAG data curation: picking corpus passages relevant to a
+# benchmark/query set) actually rank with, since it adds document-length
+# normalization and the saturating tf term that plain tf-idf lacks.
+#
+# Scale shape (the part that matters at 100 TB): query terms and the df
+# table are vocabulary-bounded dimensions; the only big join is posting
+# lists (term-keyed — the same key the tf aggregation already shuffled on)
+# against a broadcast query-term set, then one doc-keyed agg and a
+# bounded top-k window per query. No all-pairs, no global sort.
+
 
 # BM25 constants (the standard Robertson/Lucene defaults)
 BM25_K1 = 1.2
@@ -33,13 +267,9 @@ N_QUERY_DOCS = 5  # doc_id < 5 are the query set, like knn's vec_id rule
 BM25_TOPK = 10
 
 
-def docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-
 _BM25_ORACLE = f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_TOKS_DUCK}) AS term FROM documents
+      SELECT doc_id, unnest({_TOKENS_SQL_DUCK}) AS term FROM documents
     ), tf AS (
       SELECT doc_id, term, COUNT(*) AS tf FROM toks
       WHERE doc_id >= {N_QUERY_DOCS} GROUP BY doc_id, term
@@ -90,8 +320,6 @@ _BM25_ORACLE = f"""
     tags=("text", "retrieval", "pipeline"),
 )
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from roapi_spark.functions.text import tokens_col
-
     toks = docs(spark, sf_dir).select(
         "doc_id", F.explode(tokens_col()).alias("term")
     )
@@ -168,7 +396,6 @@ def bm25_index(spark: SparkSession, sf_dir: str) -> tuple[str, int, float]:
     import json
 
     from roapi_spark.functions.snapshot import build_once, snapshot_cache_dir
-    from roapi_spark.functions.text import tokens_col
 
     src = os.path.join(sf_dir, "documents.parquet")
     out = snapshot_cache_dir(src, "bm25-v1")
@@ -235,9 +462,6 @@ def bm25_index(spark: SparkSession, sf_dir: str) -> tuple[str, int, float]:
     tags=("text", "retrieval", "pipeline", "artifact"),
 )
 def q_bm25_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from roapi_spark.functions.text import tokens_col
-    from roapi_spark.plans.util import maybe_broadcast
-
     layout, n_docs, avgdl = bm25_index(spark, sf_dir)
     qterms = (
         docs(spark, sf_dir)

@@ -392,13 +392,14 @@ def lsh_layout(spark: SparkSession, sf_dir: str) -> str:
     O(corpus/2^planes) scan instead of re-hashing the full corpus per
     query — at 100 TB the bucket directories are the table layout a
     production LSH index materializes anyway."""
-    from roapi_spark.functions.snapshot import build_once, snapshot_cache_dir
+    from roapi_spark.functions.snapshot import (
+        build_once,
+        parquet_ready,
+        snapshot_cache_dir,
+    )
 
     src = os.path.join(sf_dir, "embeddings.parquet")
     out = snapshot_cache_dir(src, "lsh-v1")
-
-    def _ready(d: str) -> bool:
-        return os.path.exists(os.path.join(d, "_SUCCESS"))
 
     def _build(tmp: str) -> None:
         planes = _lsh_planes()
@@ -414,7 +415,7 @@ def lsh_layout(spark: SparkSession, sf_dir: str) -> str:
             "bucket"
         ).parquet(tmp)
 
-    build_once(out, _ready, _build)
+    build_once(out, parquet_ready, _build)
     return out
 
 
@@ -482,13 +483,14 @@ def lsh_multi_layout(spark: SparkSession, sf_dir: str) -> str:
     the cost of L x the index storage and L probed buckets per query,
     which is exactly the knob a production LSH deployment turns. Same
     content-addressed snapshot cache as ``lsh_layout``."""
-    from roapi_spark.functions.snapshot import build_once, snapshot_cache_dir
+    from roapi_spark.functions.snapshot import (
+        build_once,
+        parquet_ready,
+        snapshot_cache_dir,
+    )
 
     src = os.path.join(sf_dir, "embeddings.parquet")
     out = snapshot_cache_dir(src, "lshmulti-v1")
-
-    def _ready(d: str) -> bool:
-        return os.path.exists(os.path.join(d, "_SUCCESS"))
 
     def _build(tmp: str) -> None:
         fams = _lsh_planes_multi()
@@ -516,7 +518,7 @@ def lsh_multi_layout(spark: SparkSession, sf_dir: str) -> str:
             "t", "bucket"
         ).parquet(tmp)
 
-    build_once(out, _ready, _build)
+    build_once(out, parquet_ready, _build)
     return out
 
 
@@ -818,12 +820,6 @@ def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _IVF_LAYOUT_VERSION = "v3"  # v3: + per-cell sizes (_cells.json)
-
-
-def _cache_root() -> str:
-    from roapi_spark.functions.snapshot import cache_root
-
-    return cache_root()
 
 
 def ivf_layout(

@@ -144,37 +144,37 @@ KNOWN_TAGS = (
     "streambands-v1",
     "bm25-v1",
     "bigramlm-v1",
-    "spancov-k8-v1",  # suffix tracks REWRITE_K (= pipeline6.SPAN_K): the
+    "spancov-k8-v1",  # suffix tracks REWRITE_K (= curation.SPAN_K): the
     # covered positions are a function of the gram width
     "spanidx-k8-v1",  # same suffix rule (streaming gram index)
     "dsirlr-b256-src0-v1",  # suffix tracks DSIR_BUCKETS + DSIR_TARGET
     "deltamerge-v1",  # post-MERGE Delta table (q_delta_merge's serve path)
     "deltazorder-v1",  # ZORDER-clustered Delta table (q_delta_zorder's serve path)
     "deltackpt-v1",  # checkpointed Delta table (q_delta_checkpoint_read)
-    "srcfmt-v1",  # source-format gate fixtures (pipeline13 q_src_*)
+    "srcfmt-v1",  # source-format gate fixtures (gates q_src_*)
     "sqlgatefix-v1",  # pristine v0 delta fixture the SQL gates copy per run
     "sqlcdcfix-v1",  # CDF-enabled variant (q_sql_cdc_images)
     "srchive-v1",  # hive-partitioned gate fixture (q_src_hive_partitioned)
     "srchudi-v1",  # Hudi CoW timeline gate fixture (q_src_hudi)
     "srciceberg-v1",  # Iceberg v2 metadata gate fixture (q_src_iceberg)
-    "encgate-v1",  # response-encoder gate outputs (pipeline13 q_enc_*)
+    "encgate-v1",  # response-encoder gate outputs (gates q_enc_*)
     "bpe-m8-v1",  # learned BPE merges + post-merge vocab (suffix = BPE_MERGES)
-    "warc-v6",  # crawl-archive gate fixture (pipeline14), 8 file shards
+    "warc-v6",  # crawl-archive gate fixture (crawl q_src_warc), 8 file shards
     # + RFC 3986 hrefs, cross-host links, revisit records, CDXJ pointer
     # files with true per-capture (offset, length) coordinates
-    "cdx-v1",  # CDXJ index fixture (pipeline14), 4 SURT-sorted shards
+    "cdx-v1",  # CDXJ index fixture (crawl q_src_cdx), 4 SURT-sorted shards
     "unigram-t2-v1",  # unigram trajectory + vocab (suffix = EM_T)
-    "warcimg-v1",  # crawl-image gate fixture (pipeline14 multimodal_crawl_images)
-    "sitemap-v3",  # sitemaps.org fixture (pipeline16 q_src_sitemap):
+    "warcimg-v1",  # crawl-image gate fixture (crawl multimodal_crawl_images)
+    "sitemap-v3",  # sitemaps.org fixture (crawl q_src_sitemap):
     # index + 3 urlset shards, decorrelated optional-field residues
     "crawllinks-v1",  # materialized WAT link snapshot (src/dst canon)
     "crawllinkstext-v1",  # WAT snapshot with anchor text
-    "cdxmerge-v1",  # two-round crawl fixture (pipeline18 q_cdx_merge):
+    "cdxmerge-v1",  # two-round crawl fixture (crawl q_cdx_merge):
     # r1+r2 archives + each round's CDXJ shard set
     "cdxmaster-v1",  # range-layout latest-capture master index merged
-    # from the two-round fixture (pipeline18 q_cdx_prefix_scan)
+    # from the two-round fixture (crawl q_cdx_prefix_scan)
     "cdxzipnum-v1",  # zipnum (compressed-block) master index, same
-    # fixture (pipeline18 q_cdx_zipnum_lookup)
+    # fixture (crawl q_cdx_zipnum_lookup)
 )
 
 

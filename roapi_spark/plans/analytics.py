@@ -9,6 +9,10 @@ Conventions shared with the oracles (driver hash-compares values):
   representation skew between engines;
 - top-k queries carry a deterministic tie-break key.
 
+The behavioral analytics over the event stream (funnel, retention
+cohorts, conversion latency) and the embedding-dimension audit close
+the module.
+
 Scale notes (100 TB design intent) are in each docstring; see also
 docs/SCALE.md.
 """
@@ -744,4 +748,288 @@ def q_approx_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
         within(F.col("approx_parts"), F.col("exact_parts"), 0.10).alias("parts_ok"),
         within(F.col("approx_median"), F.col("exact_median"), 0.05).alias("median_ok"),
         within(F.col("approx_p95"), F.col("exact_p95"), 0.05).alias("p95_ok"),
+    )
+
+
+# ==== event funnel, retention cohorts, conversion latency, embedding audit ====
+# Scale notes (100 TB):
+# - q_event_funnel is ONE shuffle on user_id: the per-user event list is
+#   folded JVM-side (array_sort + aggregate over unix-micros longs), so
+#   the sequential signup->click->purchase logic never re-joins the event
+#   table per stage. The final stage counts are a 3-row agg.
+# - q_retention_cohort reuses the user_id shuffle for first-touch, then
+#   aggregates (cohort_week, offset) — output is weeks x offsets rows.
+# - q_embedding_dim_stats shuffles only (dim, partial moments): posexplode
+#   is map-side, the agg output is `dim` rows.
+
+
+FUNNEL = ("signup", "click", "purchase")
+
+
+def _funnel_stage_times(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, st{t1,t2,t3}) — per-user stage timestamps (epoch micros,
+    null = stage not reached) from the single-shuffle timeline fold."""
+    ev = events_t(spark, sf_dir).filter(F.col("event_type").isin(*FUNNEL))
+    per_user = ev.groupBy("user_id").agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct(F.unix_micros("ts").alias("us"), F.col("event_type").alias("et"))
+            )
+        ).alias("tl")
+    )
+    # fold the sorted timeline: first signup, first click strictly after
+    # it, first purchase strictly after that — accumulator carries the
+    # three stage timestamps (null = not reached)
+    walked = per_user.select(
+        F.aggregate(
+            "tl",
+            F.struct(
+                F.lit(None).cast("bigint").alias("t1"),
+                F.lit(None).cast("bigint").alias("t2"),
+                F.lit(None).cast("bigint").alias("t3"),
+            ),
+            lambda acc, e: F.struct(
+                F.when(
+                    acc.t1.isNull() & (e.et == FUNNEL[0]), e.us
+                ).otherwise(acc.t1).alias("t1"),
+                F.when(
+                    acc.t2.isNull()
+                    & acc.t1.isNotNull()
+                    & (e.et == FUNNEL[1])
+                    & (e.us > acc.t1),
+                    e.us,
+                ).otherwise(acc.t2).alias("t2"),
+                F.when(
+                    acc.t3.isNull()
+                    & acc.t2.isNotNull()
+                    & (e.et == FUNNEL[2])
+                    & (e.us > acc.t2),
+                    e.us,
+                ).otherwise(acc.t3).alias("t3"),
+            ),
+        ).alias("st")
+    )
+    return walked
+
+
+@register(
+    "q_event_funnel",
+    oracle="""
+    WITH s1 AS (
+      SELECT user_id, MIN(ts) AS t1 FROM events
+      WHERE event_type = 'signup' GROUP BY user_id
+    ), s2 AS (
+      SELECT e.user_id, MIN(e.ts) AS t2
+      FROM events e JOIN s1 ON e.user_id = s1.user_id AND e.ts > s1.t1
+      WHERE e.event_type = 'click' GROUP BY e.user_id
+    ), s3 AS (
+      SELECT e.user_id, MIN(e.ts) AS t3
+      FROM events e JOIN s2 ON e.user_id = s2.user_id AND e.ts > s2.t2
+      WHERE e.event_type = 'purchase' GROUP BY e.user_id
+    ), n AS (
+      SELECT 1 AS stage_idx, 'signup' AS stage, COUNT(*) AS n_users FROM s1
+      UNION ALL SELECT 2, 'click', COUNT(*) FROM s2
+      UNION ALL SELECT 3, 'purchase', COUNT(*) FROM s3
+    )
+    SELECT CAST(stage_idx AS BIGINT) AS stage_idx, stage,
+           CAST(n_users AS BIGINT) AS n_users,
+           FLOOR(CAST(n_users AS DOUBLE)
+                 / GREATEST(MAX(n_users) OVER (), 1) * 10000 + 0.5)
+             / 10000.0 AS conv_pct
+    FROM n
+    """,
+    doc="Ordered funnel (signup -> click after signup -> purchase after "
+    "click): per-user event timeline folded in ONE pass — array_sort the "
+    "(ts, type) structs per user, then a JVM-side aggregate() walk picks "
+    "the first qualifying timestamp per stage. The oracle states the same "
+    "semantics as three stage joins. Strictly-after (`>`) ordering at "
+    "every stage.",
+    tags=("events", "funnel"),
+)
+def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    walked = _funnel_stage_times(spark, sf_dir)
+    counts = walked.agg(
+        F.count("st.t1").alias("n1"),
+        F.count("st.t2").alias("n2"),
+        F.count("st.t3").alias("n3"),
+    )
+    # max-over-stages computed as greatest(n1, n2, n3) on the 1-row
+    # aggregate BEFORE the 3-row explode — no window at all (the oracle's
+    # MAX() OVER () states the same value; this removes the last
+    # unpartitioned WindowExec from this query's plan).
+    stages = counts.select(
+        F.explode(
+            F.array(
+                F.struct(F.lit(1).cast("bigint").alias("stage_idx"),
+                         F.lit(FUNNEL[0]).alias("stage"),
+                         F.col("n1").alias("n_users")),
+                F.struct(F.lit(2).cast("bigint").alias("stage_idx"),
+                         F.lit(FUNNEL[1]).alias("stage"),
+                         F.col("n2").alias("n_users")),
+                F.struct(F.lit(3).cast("bigint").alias("stage_idx"),
+                         F.lit(FUNNEL[2]).alias("stage"),
+                         F.col("n3").alias("n_users")),
+            )
+        ).alias("s"),
+        F.greatest("n1", "n2", "n3").alias("max_users"),
+    ).select("s.*", "max_users")
+    return stages.select(
+        "stage_idx",
+        "stage",
+        "n_users",
+        pround(
+            F.col("n_users").cast("double")
+            / F.greatest(F.col("max_users"), F.lit(1))
+        ).alias("conv_pct"),
+    )
+
+
+@register(
+    "q_retention_cohort",
+    oracle="""
+    WITH first_touch AS (
+      SELECT user_id, CAST(DATE_TRUNC('week', MIN(ts)) AS DATE) AS cohort_week
+      FROM events GROUP BY user_id
+    ), activity AS (
+      SELECT DISTINCT user_id, CAST(DATE_TRUNC('week', ts) AS DATE) AS w
+      FROM events
+    ), hits AS (
+      SELECT f.cohort_week,
+             CAST((a.w - f.cohort_week) / 7 AS BIGINT) AS week_offset,
+             a.user_id
+      FROM activity a JOIN first_touch f ON a.user_id = f.user_id
+    ), agg AS (
+      SELECT cohort_week, week_offset, COUNT(DISTINCT user_id) AS n_active
+      FROM hits GROUP BY 1, 2
+    )
+    SELECT cohort_week, week_offset,
+           CAST(n_active AS BIGINT) AS n_active,
+           FLOOR(CAST(n_active AS DOUBLE)
+                 / MAX(CASE WHEN week_offset = 0 THEN n_active END)
+                     OVER (PARTITION BY cohort_week) * 10000 + 0.5)
+             / 10000.0 AS retention_pct
+    FROM agg
+    """,
+    doc="Weekly retention cohorts: users bucketed by ISO week of first "
+    "event; n_active = distinct users from that cohort active k weeks "
+    "later; retention_pct normalized to the cohort's week-0 size. Both "
+    "engines truncate weeks to ISO Monday. The user_id shuffle is shared "
+    "by first-touch and activity; the final agg is |weeks| x |offsets| "
+    "rows.",
+    tags=("events", "cohort"),
+)
+def q_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = events_t(spark, sf_dir)
+    first_touch = ev.groupBy("user_id").agg(
+        F.date_trunc("week", F.min("ts")).cast("date").alias("cohort_week")
+    )
+    activity = ev.select(
+        "user_id", F.date_trunc("week", "ts").cast("date").alias("w")
+    ).distinct()
+    agg = (
+        activity.join(first_touch, "user_id")
+        .select(
+            "cohort_week",
+            (F.datediff("w", "cohort_week") / 7).cast("bigint").alias("week_offset"),
+            "user_id",
+        )
+        .groupBy("cohort_week", "week_offset")
+        .agg(F.countDistinct("user_id").alias("n_active"))
+    )
+    wk0 = W.partitionBy("cohort_week")
+    return agg.select(
+        "cohort_week",
+        "week_offset",
+        "n_active",
+        pround(
+            F.col("n_active").cast("double")
+            / F.max(
+                F.when(F.col("week_offset") == 0, F.col("n_active"))
+            ).over(wk0)
+        ).alias("retention_pct"),
+    )
+
+
+@register(
+    "q_embedding_dim_stats",
+    oracle="""
+    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    stats AS (
+      SELECT i - 1 AS dim,
+             FLOOR(AVG(v[i]) * 10000 + 0.5) / 10000.0 AS mean,
+             FLOOR(VAR_POP(v[i]) * 10000 + 0.5) / 10000.0 AS variance
+      FROM e, GENERATE_SERIES(1, 64) AS g(i)
+      GROUP BY i
+    )
+    SELECT CAST(dim AS BIGINT) AS dim, mean, variance
+    FROM stats ORDER BY variance DESC, dim ASC LIMIT 8
+    """,
+    doc="Embedding-dimension audit for collapsed/dead dimensions: "
+    "per-dimension mean and population variance (posexplode is map-side; "
+    "the shuffle carries `dim` partial moments, output is dim rows), "
+    "top-8 highest-variance dimensions. The check a curation pipeline "
+    "runs before trusting cosine distances.",
+    tags=("similarity", "quality"),
+)
+def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os
+
+    e = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).select(
+        F.col("embedding").cast("array<double>").alias("v")
+    )
+    return (
+        e.select(F.posexplode("v").alias("dim", "x"))
+        .groupBy("dim")
+        .agg(
+            pround(F.avg("x")).alias("mean"),
+            pround(F.var_pop("x")).alias("variance"),
+        )
+        .orderBy(F.col("variance").desc(), F.col("dim").asc())
+        .limit(8)
+        .select(F.col("dim").cast("bigint").alias("dim"), "mean", "variance")
+    )
+
+
+@register(
+    "q_conversion_latency",
+    oracle="""
+    WITH s1 AS (
+      SELECT user_id, MIN(ts) AS t1 FROM events
+      WHERE event_type = 'signup' GROUP BY user_id
+    ), s2 AS (
+      SELECT e.user_id, MIN(e.ts) AS t2
+      FROM events e JOIN s1 ON e.user_id = s1.user_id AND e.ts > s1.t1
+      WHERE e.event_type = 'click' GROUP BY e.user_id
+    ), s3 AS (
+      SELECT e.user_id, MIN(e.ts) AS t3
+      FROM events e JOIN s2 ON e.user_id = s2.user_id AND e.ts > s2.t2
+      WHERE e.event_type = 'purchase' GROUP BY e.user_id
+    ), lat AS (
+      SELECT s3.user_id,
+             (EPOCH_US(s3.t3) - EPOCH_US(s1.t1)) / 1000000.0 AS sec
+      FROM s3 JOIN s1 ON s3.user_id = s1.user_id
+    )
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_converted,
+           FLOOR(MIN(sec) * 10000 + 0.5) / 10000.0 AS min_seconds,
+           FLOOR(AVG(sec) * 10000 + 0.5) / 10000.0 AS avg_seconds,
+           FLOOR(MAX(sec) * 10000 + 0.5) / 10000.0 AS max_seconds
+    FROM lat
+    """,
+    doc="Conversion-latency summary over the completed funnels: per "
+    "converting user, seconds from first signup to the qualifying "
+    "purchase (the same single-shuffle timeline fold as q_event_funnel, "
+    "shared via _funnel_stage_times), aggregated to count/min/avg/max — "
+    "the number a growth dashboard puts next to the funnel counts.",
+    tags=("events", "funnel"),
+)
+def q_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    walked = _funnel_stage_times(spark, sf_dir)
+    lat = walked.filter(F.col("st.t3").isNotNull()).select(
+        ((F.col("st.t3") - F.col("st.t1")) / 1e6).alias("sec")
+    )
+    return lat.agg(
+        F.count("*").alias("n_converted"),
+        pround(F.min("sec")).alias("min_seconds"),
+        pround(F.avg("sec")).alias("avg_seconds"),
+        pround(F.max("sec")).alias("max_seconds"),
     )

@@ -54,28 +54,16 @@ def register(
 
 def load_all() -> dict[str, QuerySpec]:
     """Import every module that registers queries, then return the registry."""
+    import roapi_spark.functions.crawl  # noqa: F401
+    import roapi_spark.functions.curation  # noqa: F401
     import roapi_spark.functions.dedup  # noqa: F401
+    import roapi_spark.functions.gates  # noqa: F401
     import roapi_spark.functions.multimodal  # noqa: F401
-    import roapi_spark.functions.pipeline  # noqa: F401
-    import roapi_spark.functions.pipeline3  # noqa: F401
-    import roapi_spark.functions.pipeline4  # noqa: F401
-    import roapi_spark.functions.pipeline5  # noqa: F401
-    import roapi_spark.functions.pipeline6  # noqa: F401
-    import roapi_spark.functions.pipeline7  # noqa: F401
-    import roapi_spark.functions.pipeline8  # noqa: F401
-    import roapi_spark.functions.pipeline9  # noqa: F401
-    import roapi_spark.functions.pipeline10  # noqa: F401
-    import roapi_spark.functions.pipeline11  # noqa: F401
-    import roapi_spark.functions.pipeline12  # noqa: F401
-    import roapi_spark.functions.pipeline13  # noqa: F401
-    import roapi_spark.functions.pipeline14  # noqa: F401
-    import roapi_spark.functions.pipeline15  # noqa: F401
-    import roapi_spark.functions.pipeline16  # noqa: F401
-    import roapi_spark.functions.pipeline17  # noqa: F401
-    import roapi_spark.functions.pipeline18  # noqa: F401
     import roapi_spark.functions.pq  # noqa: F401
+    import roapi_spark.functions.retrieval  # noqa: F401
     import roapi_spark.functions.similarity  # noqa: F401
     import roapi_spark.functions.text  # noqa: F401
+    import roapi_spark.functions.tokenizer  # noqa: F401
     import roapi_spark.plans.analytics  # noqa: F401
     import roapi_spark.plans.coverage  # noqa: F401
     import roapi_spark.plans.frontends  # noqa: F401

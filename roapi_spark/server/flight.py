@@ -89,22 +89,6 @@ _XDBC_TYPES: list[tuple] = [
 ]
 
 
-def _sql_info_value_type() -> pa.DenseUnionType:
-    return pa.dense_union(
-        [
-            pa.field("string_value", pa.string()),
-            pa.field("bool_value", pa.bool_()),
-            pa.field("bigint_value", pa.int64()),
-            pa.field("int32_bitmask", pa.int32()),
-            pa.field("string_list", pa.list_(pa.string())),
-            pa.field(
-                "int32_to_int32_list_map", pa.map_(pa.int32(), pa.list_(pa.int32()))
-            ),
-        ],
-        type_codes=[0, 1, 2, 3, 4, 5],
-    )
-
-
 class _BearerResponder(flight.ServerMiddleware):
     """Returned on a successful Basic handshake so the bearer token rides
     back on the response headers — the pyarrow client's

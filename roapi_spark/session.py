@@ -70,24 +70,3 @@ def get_spark(
     return spark
 
 
-def load_sf_tables(spark: SparkSession, sf_dir: str) -> None:
-    """Register the driver testdata tables as temp views (lazy parquet scans).
-
-    Lazy scan (not .cache()) is deliberate: at 100 TB the data cannot be
-    materialized; Catalyst pushes filters/projections into the parquet scan.
-    """
-    for name in (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ):
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)

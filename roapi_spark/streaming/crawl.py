@@ -9,7 +9,7 @@ binaryFile file-stream cursor (exactly-once per-file delivery):
   documents appended to a Delta table, one atomic commit per batch
 
 No reference parity (roapi has no streaming surface at all) — this is
-the streaming twin of the batch crawl funnel (functions/pipeline14.py):
+the streaming twin of the batch crawl funnel (functions/crawl.py):
 the deploy shape where a fetcher fleet drops ``.warc.gz`` files into
 object storage and the corpus pipeline consumes them incrementally
 instead of re-scanning the crawl.
@@ -153,10 +153,11 @@ FRONTIER_EXACT_STATE = "seen array<string>"
 # arrival mixes) while the actual kernel work was microseconds. Bucketing
 # the key space (same shape the Bloom-bounded frontier always had) makes
 # the per-batch cost per *bucket*. Size it to state volume, not core
-# count: each batch rewrites a touched bucket's canon list, so production
-# deployments raise this until per-bucket state is comfortably small
-# (env SPARK_GRAFT_FRONTIER_BUCKETS).
-N_EXACT_BUCKETS = int(os.environ.get("SPARK_GRAFT_FRONTIER_BUCKETS", "64"))
+# count: each batch rewrites a touched bucket's canon list. It is a
+# constant, not a setting: the bucket of a URL is part of the state key,
+# so a checkpoint written under one bucket count cannot be read under
+# another.
+N_EXACT_BUCKETS = 64
 
 
 def _exact_bucket_col(col) -> "F.Column":
@@ -173,15 +174,13 @@ def _exact_bucket_col(col) -> "F.Column":
 # time. The state partition count is pinned from
 # spark.sql.shuffle.partitions when a stateful stream first starts, so it
 # should track ARRIVAL VOLUME and state size, not cluster width — exactly
-# like N_EXACT_BUCKETS above. 8 is sized for fixture arrival rates;
-# production deployments with high-volume frontiers raise it via the env
-# knob. It is not confined to the stateful stage: the gate serves call
+# like N_EXACT_BUCKETS above. 8 is sized for fixture arrival rates; a
+# high-volume frontier passes its own count to stream_state_partitions.
+# It is not confined to the stateful stage: the gate serves call
 # processAllAvailable() inside ``with stream_state_partitions(...)``, so
 # the shuffles of their foreachBatch aggregations are planned at this
 # count too (AQE can only coalesce below it).
-STREAM_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-)
+STREAM_STATE_PARTITIONS = 8
 
 
 class stream_state_partitions:

@@ -76,22 +76,36 @@ def serve_persist(df: "DataFrame") -> "DataFrame":  # noqa: F821
     """Persist a multiply-consumed intermediate for the lifetime of one
     query SERVE.
 
-    Lifecycle contract (round-15 advice item): these blocks are NOT
-    unpersisted by the query builder — the consumers live inside the
-    returned lazy DataFrame, so there is no safe point to drop them
-    before the caller's action. Instead every long-lived caller drops
-    persistent RDDs between serves:
+    Lifecycle contract: these blocks are NOT unpersisted by the query
+    builder — the consumers live inside the returned lazy DataFrame, so
+    there is no safe point to drop them before the caller's action.
+    Spark never evicts the disk half of a MEMORY_AND_DISK block, so the
+    caller that runs registry builders drops them between serves:
 
-    * ``bench.py`` unpersists all persistent RDDs between queries
-      (``drop_persistent_blocks``);
-    * ``tools/check_correctness.py`` uses one serve per fresh plan;
-    * the HTTP/PG/Flight servers serve each request from a fresh plan
-      and rely on LRU eviction of MEMORY_AND_DISK blocks — a deployment
-      holding many distinct plans hot should periodically call
-      ``spark.sparkContext._jsc.sc().getPersistentRDDs()`` cleanup the
-      same way bench.py does.
+    * ``bench.py`` and ``tools/profile_queries.py`` call
+      ``drop_persistent_blocks`` before every serve;
+    * ``tools/check_correctness.py`` serves each query once in a
+      short-lived process, and the blocks go with it.
+
+    The HTTP/PG/MySQL/Flight servers never call a registry builder: they
+    serve catalog SQL only, so they create no serve-scoped blocks. Their
+    only persists are ``Catalog``'s pinned table generations, which
+    unpersist generation n-2 themselves; a server-side sweep would drop
+    those table caches.
 
     Use this wrapper (not bare ``.persist()``) for serve-scoped persists
     so the contract is greppable in one place.
     """
     return df.persist()
+
+
+def drop_persistent_blocks(spark: "SparkSession") -> None:  # noqa: F821
+    """Unpersist every persistent RDD of ``spark``'s context: the
+    ``serve_persist`` blocks and the localCheckpoint intermediates of
+    iterative queries, so one serve's blocks don't pressure the next
+    serve's memory or local disk."""
+    jsc = spark.sparkContext._jsc.sc()
+    for rdd in spark.sparkContext._jvm.scala.collection.JavaConverters.mapAsJavaMap(
+        jsc.getPersistentRDDs()
+    ).values():
+        rdd.unpersist(False)

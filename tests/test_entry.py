@@ -59,19 +59,19 @@ def test_ordered_specs_change_aware(monkeypatch):
     names = list(specs)
     fake_latest[names[0]] = (2, dict(GREEN))
 
-    # pretend only pipeline13's own file changed since round 1 (and
+    # pretend only gates.py's own file changed since round 1 (and
     # nothing since round 2): queries built there become stale, others
     # stay fresh in registration order
     def fake_changed(rnd):
-        return {"roapi_spark/functions/pipeline13.py"} if rnd <= 1 else set()
+        return {"roapi_spark/functions/gates.py"} if rnd <= 1 else set()
 
     monkeypatch.setattr(entrymod, "_latest_rows", lambda: fake_latest)
     monkeypatch.setattr(entrymod, "_changed_since_round", fake_changed)
     ordered = list(entrymod._ordered_specs())
     p13 = [n for n, s in specs.items()
-           if s.builder.__module__ == "roapi_spark.functions.pipeline13"
+           if s.builder.__module__ == "roapi_spark.functions.gates"
            and fake_latest[n][0] == 1]
-    assert p13, "expected pipeline13-built queries in the registry"
+    assert p13, "expected gates-built queries in the registry"
     k = len(p13)
     assert set(ordered[:k]) == set(p13)
     assert sorted(ordered) == sorted(names)
@@ -79,11 +79,11 @@ def test_ordered_specs_change_aware(monkeypatch):
 
 def test_transitive_module_files_reaches_reworked_machinery():
     """The delta DML queries' builders are thin wrappers in
-    functions/pipeline13.py — the change tracker must see through to
+    functions/gates.py — the change tracker must see through to
     sinks/delta.py and catalog.py, else a delta rework never re-floats
     their rows."""
-    files = entrymod._transitive_module_files("roapi_spark.functions.pipeline13")
-    assert "roapi_spark/functions/pipeline13.py" in files
+    files = entrymod._transitive_module_files("roapi_spark.functions.gates")
+    assert "roapi_spark/functions/gates.py" in files
     assert "roapi_spark/sinks/delta.py" in files
     assert "roapi_spark/catalog.py" in files
     # the registry glue module must NOT drag in the whole package

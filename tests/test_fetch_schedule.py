@@ -7,7 +7,7 @@ robots_crawl_delay parser never fed).
 
 from __future__ import annotations
 
-from roapi_spark.functions.pipeline17 import (
+from roapi_spark.functions.crawl import (
     _CRAWL_UA,
     _DEFAULT_DELAY_MS,
     _DELAY_MS,

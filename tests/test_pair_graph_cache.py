@@ -230,23 +230,20 @@ def test_known_tags_cover_every_call_site():
 
                 used.add(f"embpairscid-{_IVF_LAYOUT_VERSION}")
             elif arg.startswith('f"spancov-') or arg.startswith('f"spanidx-'):
-                from roapi_spark.functions.pipeline10 import REWRITE_K
+                from roapi_spark.functions.curation import REWRITE_K
 
                 kind = "spancov" if "spancov" in arg else "spanidx"
                 used.add(f"{kind}-k{REWRITE_K}-v1")
             elif arg.startswith('f"bpe-m'):
-                from roapi_spark.functions.pipeline12 import BPE_MERGES
+                from roapi_spark.functions.tokenizer import BPE_MERGES
 
                 used.add(f"bpe-m{BPE_MERGES}-v1")
             elif arg.startswith('f"unigram-t'):
-                from roapi_spark.functions.pipeline15 import EM_T
+                from roapi_spark.functions.tokenizer import EM_T
 
                 used.add(f"unigram-t{EM_T}-v1")
             elif arg.startswith('f"dsirlr-'):
-                from roapi_spark.functions.pipeline10 import (
-                    DSIR_BUCKETS,
-                    DSIR_TARGET,
-                )
+                from roapi_spark.functions.curation import DSIR_BUCKETS, DSIR_TARGET
 
                 used.add(f"dsirlr-b{DSIR_BUCKETS}-{DSIR_TARGET}-v1")
             else:

@@ -9,7 +9,7 @@ import hashlib
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from roapi_spark.functions.pipeline10 import (
+from roapi_spark.functions.curation import (
     SHARD_BUDGET,
     dedup_span_rewrite,
     q_dsir_weights,
@@ -150,10 +150,10 @@ def test_split_leakage_counts_boundary_pairs(spark, tmp_path, monkeypatch):
     # verify against a driver-side recomputation of the same rule
     t = "qa qb qc qd qe qf qg qh qi qj"
     d = _write_docs(tmp_path, {"s": [t, t, "ra rb rc rd re rf rg rh"]})
-    from roapi_spark.functions.pipeline10 import q_split_leakage
-    from roapi_spark.functions.pipeline9 import (
+    from roapi_spark.functions.curation import (
         SPLIT_TRAIN_PCT,
         SPLIT_VAL_PCT,
+        q_split_leakage,
     )
 
     def split_of(doc_id: int) -> str:
@@ -169,7 +169,7 @@ def test_span_rewrite_served_skips_gram_tally(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CACHE_DIR", str(tmp_path / "cache"))
     t = "sa sb sc sd se sf sg sh si"
     d = _write_docs(tmp_path, {"s": [t, t, "ta tb tc"]})
-    from roapi_spark.functions.pipeline10 import dedup_span_rewrite_served
+    from roapi_spark.functions.curation import dedup_span_rewrite_served
 
     out = dedup_span_rewrite_served(spark, d)
     got = {r.doc_id: (r.n_kept, r.clean_text) for r in out.collect()}
@@ -187,7 +187,7 @@ def test_shard_assign_oversized_doc_stays_one_shard(spark, tmp_path):
     # budget inflates its own shard rather than splitting (shards are
     # document-atomic — the training loader owns intra-doc chunking),
     # and the NEXT doc starts a fresh shard
-    from roapi_spark.functions.pipeline10 import SHARD_BUDGET, shard_assign
+    from roapi_spark.functions.curation import SHARD_BUDGET, shard_assign
 
     big = " ".join(
         f"w{chr(97 + i % 26)}{chr(97 + (i // 26) % 26)}"
@@ -215,7 +215,7 @@ def test_dsir_select_skews_target_like(spark, tmp_path, monkeypatch):
     rate: the accepted set's mean weight dominates the pool's, and a
     source full of target-domain text out-selects an off-domain one."""
     monkeypatch.setenv("SPARK_GRAFT_CACHE_DIR", str(tmp_path / "cache"))
-    from roapi_spark.functions.pipeline10 import q_dsir_select, q_dsir_weights
+    from roapi_spark.functions.curation import q_dsir_select, q_dsir_weights
 
     target_text = "alpha beta gamma delta epsilon zeta eta theta"
     off_text = "zulu yankee xray whiskey victor uniform tango sierra"

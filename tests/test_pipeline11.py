@@ -8,7 +8,7 @@ from tests.test_pipeline10 import SHARED8, _write_docs
 
 def test_rewrite_impact_localizes_boilerplate(spark, tmp_path):
     # srcA's two docs share an 8-token span (cut in both); srcB is clean
-    from roapi_spark.functions.pipeline11 import q_rewrite_impact
+    from roapi_spark.functions.curation import q_rewrite_impact
 
     d = _write_docs(
         tmp_path,
@@ -23,7 +23,7 @@ def test_rewrite_impact_localizes_boilerplate(spark, tmp_path):
 
 
 def test_shard_mixture_single_source_entropy_zero(spark, tmp_path):
-    from roapi_spark.functions.pipeline11 import q_shard_mixture
+    from roapi_spark.functions.curation import q_shard_mixture
 
     d = _write_docs(tmp_path, {"only": ["aa bb cc"] * 6})
     for r in q_shard_mixture(spark, d).collect():
@@ -32,7 +32,7 @@ def test_shard_mixture_single_source_entropy_zero(spark, tmp_path):
 
 def test_dup_quality_bias_flags_pair_members(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CACHE_DIR", str(tmp_path / "cache"))
-    from roapi_spark.functions.pipeline11 import q_dup_quality_bias
+    from roapi_spark.functions.curation import q_dup_quality_bias
 
     t = "qa qb qc qd qe qf qg qh qi qj"
     d = _write_docs(tmp_path, {"s": [t, t, "ra rb rc rd re rf rg rh"]})
@@ -44,8 +44,7 @@ def test_dup_quality_bias_flags_pair_members(spark, tmp_path, monkeypatch):
 def test_curation_funnel_doc_stages_match_dedup_funnel(spark):
     # the curation funnel's doc stages must be exactly q_dedup_funnel's
     # (both now derive from funnel_survivors / _FUNNEL_DUCK)
-    from roapi_spark.functions.pipeline9 import q_dedup_funnel
-    from roapi_spark.functions.pipeline11 import q_curation_funnel
+    from roapi_spark.functions.curation import q_curation_funnel, q_dedup_funnel
 
     sf = "/root/testdata/sf0.001"
     a = q_dedup_funnel(spark, sf).collect()[0]

@@ -24,7 +24,7 @@ from tests.test_pipeline10 import _write_docs
 
 
 # --- independent reference implementation (no shared code with
-# roapi_spark.functions.pipeline12: list-based, no string replace) ---
+# roapi_spark.functions.tokenizer: list-based, no string replace) ---
 
 def _greedy_merge(syms: list[str], pair: tuple[str, str]) -> list[str]:
     out, i = [], 0
@@ -90,7 +90,7 @@ CORPUS = {
 
 
 def test_trainer_matches_independent_reference(spark, tmp_path):
-    from roapi_spark.functions.pipeline12 import bpe_train_state
+    from roapi_spark.functions.tokenizer import bpe_train_state
 
     texts = [t for ts in CORPUS.values() for t in ts]
     d = _write_docs(tmp_path, CORPUS)
@@ -100,10 +100,7 @@ def test_trainer_matches_independent_reference(spark, tmp_path):
 
 
 def test_fertility_equals_reference_piece_counts(spark, tmp_path):
-    from roapi_spark.functions.pipeline12 import (
-        BPE_MERGES,
-        text_bpe_fertility,
-    )
+    from roapi_spark.functions.tokenizer import BPE_MERGES, text_bpe_fertility
 
     d = _write_docs(tmp_path, CORPUS)
     texts_by_src = {
@@ -153,7 +150,7 @@ def _ref_lr(rows, n_iters, S=1024, half=512, lr_div=8.0, sig_div=4.0, clamp=1638
 
 
 def test_lr_trainer_matches_independent_reference(spark, tmp_path):
-    from roapi_spark.functions.pipeline12 import _lr_features, lr_train_state
+    from roapi_spark.functions.text import _lr_features, lr_train_state
 
     corpus = {
         "a": ["the cat sat on the mat in a hat", "zzzz qqqq xxxx", "a b c d"],
@@ -171,7 +168,7 @@ def test_lr_trainer_matches_independent_reference(spark, tmp_path):
 
 
 def test_lr_training_improves_accuracy(spark):
-    from roapi_spark.functions.pipeline12 import lr_train_state
+    from roapi_spark.functions.text import lr_train_state
 
     rows = lr_train_state(spark, "/root/testdata/sf0.001")
     acc = [ok / n for (_, _, _, _, _, _, ok, n) in rows]
@@ -181,7 +178,7 @@ def test_lr_training_improves_accuracy(spark):
 
 def test_bpe_served_paths_equal_recompute(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CACHE_DIR", str(tmp_path / "cache"))
-    from roapi_spark.functions.pipeline12 import (
+    from roapi_spark.functions.tokenizer import (
         text_bpe_fertility,
         text_bpe_fertility_served,
         text_bpe_train,
@@ -199,11 +196,11 @@ def test_bpe_served_paths_equal_recompute(spark, tmp_path, monkeypatch):
     )
     # second call must be a pure artifact read (no retrain): drop the
     # in-process memo and verify the layout is reused, not rebuilt
-    from roapi_spark.functions import pipeline12 as p12
+    from roapi_spark.functions import tokenizer as p12
 
     layout_before = p12.bpe_layout(spark, d)
     mtime = os.path.getmtime(os.path.join(layout_before, "merges.json"))
-    p12._MEMO.clear()
+    p12._BPE_MEMO.clear()
     assert p12.bpe_layout(spark, d) == layout_before
     assert os.path.getmtime(os.path.join(layout_before, "merges.json")) == mtime
 
@@ -214,7 +211,7 @@ def test_encode_consistent_with_fertility_and_reference(spark, tmp_path, monkeyp
     per-doc piece sequences must equal applying the reference trainer's
     final vocab word-by-word."""
     monkeypatch.setenv("SPARK_GRAFT_CACHE_DIR", str(tmp_path / "cache"))
-    from roapi_spark.functions.pipeline12 import (
+    from roapi_spark.functions.tokenizer import (
         BPE_MERGES,
         text_bpe_encode,
         text_bpe_fertility,
@@ -258,7 +255,7 @@ def test_delta_zorder_serve_path_actually_skips_files(spark, tmp_path, monkeypat
     pruned candidate set must still reproduce the full filtered
     result exactly."""
     import roapi_spark.functions.snapshot as snap
-    from roapi_spark.functions.pipeline12 import (
+    from roapi_spark.functions.gates import (
         _ZORDER_CK,
         _ZORDER_TP,
         _zordered_orders_table,

@@ -1,4 +1,4 @@
-"""Unigram-LM trainer (pipeline15): cross-engine fixed-point contract,
+"""Unigram-LM trainer (functions/tokenizer.py): cross-engine fixed-point contract,
 Viterbi semantics against an independent recursive implementation, and
 end-to-end state sanity on the smoke corpus."""
 
@@ -10,7 +10,7 @@ from functools import lru_cache
 import duckdb
 import pytest
 
-from roapi_spark.functions.pipeline15 import (
+from roapi_spark.functions.tokenizer import (
     BIG,
     EM_T,
     MAX_P,
@@ -127,8 +127,8 @@ def test_encode_pieces_concatenate_back(spark, sf_dir):
     pieces concatenate to exactly the unit string."""
     from pyspark.sql import functions as F
 
-    from roapi_spark.functions.pipeline15 import (
-        _PAIRS_SPARK,
+    from roapi_spark.functions.tokenizer import (
+        _UNI_PAIRS_SPARK as _PAIRS_SPARK,
         text_unigram_encode,
     )
     from roapi_spark.functions.text import docs, tokens_col
@@ -164,7 +164,7 @@ def test_prune_invariants(spark, sf_dir):
     multi-char pieces => coarser segmentation is impossible)."""
     from pyspark.sql import Row
 
-    from roapi_spark.functions.pipeline15 import (
+    from roapi_spark.functions.tokenizer import (
         PRUNE_KEEP,
         text_unigram_prune,
         unigram_train_state,
@@ -217,7 +217,7 @@ def test_letter_free_docs_do_not_crash_pair_units(spark):
     expression must yield an empty list, not a slice() error."""
     from pyspark.sql import functions as F
 
-    from roapi_spark.functions.pipeline15 import _PAIRS_SPARK
+    from roapi_spark.functions.tokenizer import _UNI_PAIRS_SPARK as _PAIRS_SPARK
 
     df = spark.createDataFrame(
         [("1234 !!!",), ("one",), ("two words",)], "text string"
@@ -239,12 +239,7 @@ def test_em_forward_backward_equals_path_enumeration():
 
     import pandas as pd
 
-    from roapi_spark.functions.pipeline15 import (
-        _EM_P,
-        _EM_S,
-        _em_fb_kernel,
-        _em_paths,
-    )
+    from roapi_spark.functions.tokenizer import _EM_P, _EM_S, _em_fb_kernel, _em_paths
 
     words = ["a", "ab", "abc", "abca", "banana", "zzzzzz", "xyxyxy"]
     pieces = {
@@ -289,6 +284,6 @@ def test_em_forward_backward_equals_path_enumeration():
 
 
 def test_em_paths_counts_are_tribonacci():
-    from roapi_spark.functions.pipeline15 import _em_paths
+    from roapi_spark.functions.tokenizer import _em_paths
 
     assert [len(_em_paths(n)) for n in range(7)] == [1, 1, 2, 4, 7, 13, 24]

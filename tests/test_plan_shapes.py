@@ -60,7 +60,8 @@ def test_semi_join_for_exists(spark, specs):
 
 
 def test_minhash_signatures_no_shuffle(spark, specs):
-    from roapi_spark.functions.dedup import docs, minhash_signatures
+    from roapi_spark.functions.dedup import minhash_signatures
+    from roapi_spark.functions.text import docs
 
     plan = (
         minhash_signatures(docs(spark, SF))

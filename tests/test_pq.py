@@ -136,7 +136,7 @@ def test_ivfpq_rerank_subset_and_exact_order(spark):
 def test_rerank_recall_dominates_raw_adc(spark):
     """The refine stage exists to recover ADC's quantization loss: on
     the test corpus reranked recall@5 must be >= the raw ADC recall."""
-    from roapi_spark.functions.pipeline6 import q_pq_recall, q_pq_rerank_recall
+    from roapi_spark.functions.retrieval import q_pq_recall, q_pq_rerank_recall
 
     raw = q_pq_recall(spark, SF).collect()[0].recall_at_5
     rer = q_pq_rerank_recall(spark, SF).collect()[0].recall_at_5

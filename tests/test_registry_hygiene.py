@@ -126,3 +126,83 @@ def test_no_unpartitioned_windows_in_package_source():
         "unpartitioned Window specs found (single-partition sort at "
         f"scale):\n" + "\n".join(bad)
     )
+
+
+def _package_modules(*subpkgs: str) -> dict[str, str]:
+    """dotted module name -> file path for every .py under the subpackages."""
+    out = {}
+    for sub in subpkgs:
+        d = os.path.join(REPO, "roapi_spark", sub)
+        for fn in sorted(os.listdir(d)):
+            if fn.endswith(".py"):
+                mod = f"roapi_spark.{sub}.{fn[:-3]}".removesuffix(".__init__")
+                out[mod] = os.path.join(d, fn)
+    return out
+
+
+def test_no_round_numbered_modules():
+    """Query modules are named for their domain (text, curation, crawl,
+    ...), not for the round that added them: a ``pipelineN`` module
+    scatters one family over several files that then reach into each
+    other."""
+    bad = [m for m in _package_modules("functions", "plans")
+           if re.fullmatch(r"pipeline\d*", m.rsplit(".", 1)[-1])]
+    assert not bad, f"round-numbered modules: {bad}"
+
+
+def test_no_module_binds_a_top_level_name_twice():
+    """A second top-level def/class/assignment of a name silently
+    replaces the first. Builders and oracles look their helpers up by
+    global name when they run, so merged modules that rebind a helper
+    would hand one query another query's helper."""
+    import ast
+
+    bad = []
+    for mod, path in _package_modules("functions", "plans", "streaming").items():
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        seen: dict[str, int] = {}
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, ast.Assign):
+                names = [n.id for t in node.targets for n in ast.walk(t)
+                         if isinstance(n, ast.Name)]
+            elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+                names = [node.target.id]
+            else:
+                continue
+            for name in names:
+                if name in seen:
+                    bad.append(f"{mod}: {name} (lines {seen[name]} and {node.lineno})")
+                seen[name] = node.lineno
+    assert not bad, "top-level names bound twice:\n" + "\n".join(bad)
+
+
+def test_load_all_imports_exactly_the_registering_modules():
+    """Every module with an ``@register(`` is imported by ``load_all``
+    (else its queries silently miss the oracle gate, bench and
+    PLANS.md), and every module ``load_all`` imports registers at least
+    one query (else it is dead weight in every registry load)."""
+    import ast
+
+    from roapi_spark.plans import registry
+
+    with open(registry.__file__) as f:
+        tree = ast.parse(f.read())
+    fn = next(n for n in tree.body
+              if isinstance(n, ast.FunctionDef) and n.name == "load_all")
+    imported = {a.name for n in ast.walk(fn) if isinstance(n, ast.Import)
+                for a in n.names}
+    registering = set()
+    for mod, path in _package_modules("functions", "plans", "streaming").items():
+        with open(path) as f:
+            if "@register(" in f.read():
+                registering.add(mod)
+    assert registering - imported == set(), (
+        f"modules with @register( that load_all does not import: "
+        f"{sorted(registering - imported)}")
+    builders = {s.builder.__module__ for s in load_all().values()}
+    assert imported - builders == set(), (
+        f"load_all imports modules that register nothing: "
+        f"{sorted(imported - builders)}")

@@ -387,7 +387,7 @@ def test_lsh_match_stream_incremental_dedup(spark, tmp_path):
     # a new exact copy of a corpus doc matches it; novel text matches nothing
     import json as _json
 
-    from roapi_spark.functions.dedup import docs as corpus_docs
+    from roapi_spark.functions.text import docs as corpus_docs
     from roapi_spark.streaming.docs import (
         corpus_band_table,
         lsh_match_stream,
@@ -452,7 +452,7 @@ def test_lsh_match_stream_checkpoint_restart(spark, tmp_path):
     this leg uses a parquet sink)."""
     import json as _json
 
-    from roapi_spark.functions.dedup import docs as corpus_docs
+    from roapi_spark.functions.text import docs as corpus_docs
     from roapi_spark.streaming.docs import (
         corpus_band_table,
         lsh_match_stream,
@@ -506,7 +506,7 @@ def test_bm25_score_stream_matches_batch(spark, tmp_path):
 
     import pyarrow.parquet as _pq
 
-    from roapi_spark.functions.pipeline7 import BM25_TOPK
+    from roapi_spark.functions.retrieval import BM25_TOPK
     from roapi_spark.plans.registry import load_all
     from roapi_spark.streaming.retrieval import bm25_score_stream, stream_docs
 
@@ -715,7 +715,7 @@ def test_span_clean_stream_cuts_corpus_spans(spark, tmp_path):
     # span cut; fresh text and sub-K docs pass through untouched
     import json as _json
 
-    from roapi_spark.functions.dedup import docs as corpus_docs
+    from roapi_spark.functions.text import docs as corpus_docs
     from roapi_spark.streaming.docs import (
         corpus_gram_index,
         span_clean_stream,
@@ -777,7 +777,7 @@ def test_span_clean_stream_checkpoint_restart(spark, tmp_path):
     (parquet sink — memory sinks cannot recover)."""
     import json as _json
 
-    from roapi_spark.functions.dedup import docs as corpus_docs
+    from roapi_spark.functions.text import docs as corpus_docs
     from roapi_spark.streaming.docs import (
         corpus_gram_index,
         span_clean_stream,
@@ -834,7 +834,7 @@ def test_quality_screen_stream_matches_batch_head(spark, tmp_path):
     exactly: same feature expressions, same fixed-point weights."""
     import json as _json
 
-    from roapi_spark.functions.pipeline12 import (
+    from roapi_spark.functions.text import (
         LR_D,
         lr_feature_frame,
         lr_score_cols,
@@ -846,7 +846,7 @@ def test_quality_screen_stream_matches_batch_head(spark, tmp_path):
     rows_state = lr_train_state(spark, sf)
     w = list(rows_state[-1][1 : 1 + LR_D])
 
-    from roapi_spark.functions.dedup import docs as corpus_docs
+    from roapi_spark.functions.text import docs as corpus_docs
 
     texts = [r["text"] for r in corpus_docs(spark, sf).limit(6).collect()]
     d = tmp_path / "docs_in"

@@ -1,4 +1,4 @@
-"""Cross-engine fuzz for the web-ingestion expressions: the pipeline14
+"""Cross-engine fuzz for the web-ingestion expressions: the crawl-gate
 oracles claim that functions/web's Spark column expressions and the
 generated DuckDB SQL canonicalize/match IDENTICALLY — these tests
 hammer that equivalence over generated inputs instead of the gates'
@@ -14,7 +14,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from roapi_spark.functions.pipeline14 import _canon_sql
+from roapi_spark.functions.crawl import _canon_sql
 from roapi_spark.functions.web import (
     canonical_url,
     extract_main_text,

@@ -24,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from roapi_spark.plans.registry import load_all  # noqa: E402
 from roapi_spark.session import get_spark  # noqa: E402
+from roapi_spark.util import drop_persistent_blocks  # noqa: E402
 
 
 def main() -> int:
@@ -62,13 +63,6 @@ def main() -> int:
     spark.range(1000).count()
     specs["q6_revenue_delta"].builder(spark, sf_dir).count()
 
-    def drop_persistent_blocks() -> None:
-        jsc = spark.sparkContext._jsc.sc()
-        for rdd in spark.sparkContext._jvm.scala.collection.JavaConverters.mapAsJavaMap(
-            jsc.getPersistentRDDs()
-        ).values():
-            rdd.unpersist(False)
-
     if plans_dir:
         os.makedirs(plans_dir, exist_ok=True)
 
@@ -82,7 +76,7 @@ def main() -> int:
                 f.write(plan)
         ts = []
         for p in range(passes):
-            drop_persistent_blocks()
+            drop_persistent_blocks(spark)
             spark.sparkContext.setJobDescription(f"profile:{name}:pass{p}")
             t0 = time.time()
             specs[name].builder(spark, sf_dir).write.mode("overwrite").format(
